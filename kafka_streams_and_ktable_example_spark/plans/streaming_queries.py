@@ -320,8 +320,9 @@ FROM latest GROUP BY o_custkey
     doc="TRUE incremental view maintenance (the adder/subtractor of "
     "kafka_streams.clj:72-79 for sum/count aggregates): per micro-batch, "
     "each changed key's old contribution is subtracted and its new one "
-    "added — O(changed keys) per batch, the view snapshot is never "
-    "rescanned, zero-count groups vanish (nil-deletes-row). Final state "
+    "added — the delta is computed from the changed keys alone (I/O is "
+    "still O(|state|): each batch rewrites state and view), zero-count "
+    "groups vanish (nil-deletes-row). Final state "
     "equals the batch recompute, proving snapshot-recompute ≡ "
     "incremental maintenance (SURVEY §4.3) in the other direction.",
     tags=("streaming", "ktable", "stateful", "parity"),
@@ -741,8 +742,9 @@ GROUP BY client
     doc="The reference's set-valued view maintained INCREMENTALLY as "
     "sorted arrays (streaming/pipeline.py::SetIvmJob): per micro-batch "
     "each changed key's old visible position is array_except'ed out and "
-    "its new one array_union'ed in — O(changed keys) per batch, no "
-    "collect_set recompute of the snapshot, empty array deletes the row. "
+    "its new one array_union'ed in — the delta comes from the changed "
+    "keys alone, no collect_set recompute of the snapshot (I/O is still "
+    "O(|state|)), empty array deletes the row. "
     "This is SURVEY §7.4 hard-part #4's '100 TB representation' "
     "(sorted arrays + set algebra instead of per-group re-collection) "
     "actually wired: final state must equal the batch-recomputed "

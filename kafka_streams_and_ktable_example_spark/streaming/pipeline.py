@@ -20,10 +20,13 @@ trace (micro-batching legitimately conflates intra-batch updates; the
 reference's cache=0 per-record emission is not promised).
 
 Scale/production shape: the compaction merge is one hash aggregation keyed
-by `key` per micro-batch; state lives in a parquet snapshot directory
-(stand-in for Delta MERGE on a cluster). Restart safety: checkpointed source
-offsets + idempotent whole-snapshot rewrite (the merge is a pure function of
-old-state ∪ batch, so replaying a batch converges to the same state).
+by `key` per micro-batch; state lives in parquet tables (stand-ins for Delta
+MERGE on a cluster). Restart safety: checkpointed source offsets + the
+epoch-committed table store (`store.py`): every maintainer writes all of
+an epoch's tables as new versions and publishes them at once with one
+manifest swap, so a crash at any point followed by a replay of the epoch
+gives the same state as a clean run, and a replay of an epoch already
+committed does nothing.
 
 Kafka wiring: swap the parquet file source for
 ``spark.readStream.format("kafka").option("subscribe", topic)`` and
@@ -44,7 +47,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.ktable import grouped_reduce_view
+from ..session import scratch_dir
 from ..sources.changelog import CHANGELOG_SCHEMA
+from .store import EpochStore
 
 
 def compact(changelog: DataFrame) -> DataFrame:
@@ -58,6 +63,17 @@ def compact(changelog: DataFrame) -> DataFrame:
     return changelog.groupBy("key").agg(
         F.max_by("value", "offset").alias("value"),
         F.max("offset").alias("offset"),
+    )
+
+
+def compact_flat(df: DataFrame, payload_cols: list) -> DataFrame:
+    """compact() over flat columns: the latest payload and tombstone flag
+    per key, tombstones retained."""
+    packed = F.max_by(F.struct(*payload_cols, "tombstone"), "offset")
+    return (
+        df.groupBy("key")
+        .agg(packed.alias("p"), F.max("offset").alias("offset"))
+        .select("key", "p.*", "offset")
     )
 
 
@@ -94,28 +110,22 @@ def _restore_shuffle(spark: SparkSession, prev: dict) -> None:
 class ChangelogStreamJob:
     """foreachBatch maintainer of a compacted snapshot + materialized view.
 
-    State: parquet dir holding the compacted changelog (key, value, offset).
-    Each micro-batch: state ← compact(state ∪ batch), atomically swapped.
+    State: one table holding the compacted changelog (key, value, offset)
+    in an epoch store under ``state_dir``. Each micro-batch:
+    state ← compact(state ∪ batch), committed as the batch's epoch.
     """
 
     def __init__(self, spark: SparkSession, state_dir: str):
-        self.spark = spark
-        self.state_dir = state_dir
-        self._has_state = os.path.exists(os.path.join(state_dir, "_SUCCESS"))
+        self.store = EpochStore(spark, state_dir)
 
     def read_state(self) -> DataFrame:
-        if not self._has_state:
-            return self.spark.createDataFrame([], CHANGELOG_SCHEMA)
-        return self.spark.read.parquet(self.state_dir)
+        return self.store.read("compact", CHANGELOG_SCHEMA)
 
     def process_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
+        if self.store.committed(epoch_id):
+            return
         merged = compact(self.read_state().unionByName(batch_df))
-        tmp = self.state_dir + f".tmp-{epoch_id}"
-        merged.write.mode("overwrite").parquet(tmp)
-        if os.path.exists(self.state_dir):
-            shutil.rmtree(self.state_dir)
-        os.rename(tmp, self.state_dir)
-        self._has_state = True
+        self.store.commit(epoch_id, {"compact": merged})
 
     def snapshot(self) -> DataFrame:
         """Live rows of the maintained state (tombstones dropped), value
@@ -137,7 +147,7 @@ def run_shareholders_stream(
     Mirrors create-kafka-stream-topology + start (kafka_streams.clj:60-96):
     build is lazy, .start() executes, the view is queryable afterwards.
     """
-    work_dir = work_dir or tempfile.mkdtemp(prefix="ktable_stream_")
+    work_dir = work_dir or scratch_dir("ktable_stream_")
     state_dir = os.path.join(work_dir, "state")
     checkpoint = os.path.join(work_dir, "checkpoint")
     job = ChangelogStreamJob(spark, state_dir)
@@ -245,6 +255,34 @@ def write_changelog_chunks(
     return out_dir
 
 
+def _replay(spark: SparkSession, changelog: DataFrame, job_cls, prefix: str, n_chunks: int):
+    """Replay ``changelog`` as ``n_chunks`` offset-ordered micro-batches
+    through a new ``job_cls`` maintainer and return the job.
+
+    Per-batch deltas are tiny next to the session's shuffle width, so the
+    replay pins a small fan-out (restored after the run): the task count,
+    and so the scheduler overhead, stays proportional to the data."""
+    chunk_dir = scratch_dir(f"{prefix}_chunks_")
+    write_changelog_chunks(changelog, chunk_dir, n_chunks=n_chunks)
+    work_dir = scratch_dir(f"{prefix}_state_")
+    job = job_cls(spark, work_dir)
+    prev_parts = _pin_small_shuffle(spark)
+    try:
+        (
+            spark.readStream.schema(changelog.schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(chunk_dir)
+            .writeStream.foreachBatch(job.process_batch)
+            .option("checkpointLocation", os.path.join(work_dir, "checkpoint"))
+            .trigger(availableNow=True)
+            .start()
+            .awaitTermination()
+        )
+    finally:
+        _restore_shuffle(spark, prev_parts)
+    return job
+
+
 def _events_stream(spark: SparkSession, sf_dir: str):
     """events.parquet as a file-source stream (ts normalized to TimestampType).
 
@@ -262,7 +300,7 @@ def _events_stream(spark: SparkSession, sf_dir: str):
         # below would bury the part files one level deep, where the file
         # stream's directory listing never finds them (zero batches).
         return norm(spark.readStream.schema(schema).parquet(path))
-    stream_dir = tempfile.mkdtemp(prefix="events_stream_")
+    stream_dir = scratch_dir("events_stream_")
     link = os.path.join(stream_dir, "events.parquet")
     if not os.path.exists(link):
         os.symlink(path, link)
@@ -510,7 +548,8 @@ class AggIvmJob:
     sum/count aggregates instead of sets, with NO per-batch recompute of
     the view.
 
-    Two state tables (parquet dirs, stand-ins for Delta at cluster scale):
+    Two state tables (in one epoch store, stand-ins for Delta at cluster
+    scale):
 
     - compacted changelog: latest record per key (tombstones retained) —
       consulted only to learn each changed key's PREVIOUS contribution;
@@ -519,36 +558,24 @@ class AggIvmJob:
       ``+new_contribution`` (adder) per changed key. A group whose count
       reaches zero is dropped — the subtractor's nil-deletes-row rule.
 
-    Work per batch is O(|changed keys|) + one groupBy on the (small)
-    delta set, NOT O(|snapshot|): at 100 TB the view never gets rescanned,
-    which is the whole point of incremental maintenance. Re-keying (a
-    key's group column changing) is handled naturally: the subtract lands
-    on the old group, the add on the new one.
+    Computing the delta is O(|changed keys|) + one groupBy on the (small)
+    delta set, NOT O(|snapshot|). I/O is still O(|state|): each batch
+    rewrites both tables whole (a keyed MERGE at cluster scale would write
+    only the changed rows). Re-keying (a key's group column changing) is
+    handled naturally: the subtract lands on the old group, the add on the
+    new one.
     """
 
+    AGG_SCHEMA = "o_custkey long, n_orders long, total_price double"
+
     def __init__(self, spark: SparkSession, work_dir: str):
-        self.spark = spark
-        self.state_dir = os.path.join(work_dir, "compact_state")
-        self.agg_dir = os.path.join(work_dir, "agg_state")
-        self._schema = None
-
-    def _read(self, path, schema):
-        if not os.path.exists(os.path.join(path, "_SUCCESS")):
-            return self.spark.createDataFrame([], schema)
-        return self.spark.read.parquet(path)
-
-    def _write(self, df: DataFrame, path: str, epoch_id: int) -> None:
-        tmp = path + f".tmp-{epoch_id}"
-        df.write.mode("overwrite").parquet(tmp)
-        if os.path.exists(path):
-            shutil.rmtree(path)
-        os.rename(tmp, path)
+        self.store = EpochStore(spark, work_dir)
 
     def process_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
-        self._schema = batch_df.schema
-        agg_schema = "o_custkey long, n_orders long, total_price double"
-        state = self._read(self.state_dir, self._schema)
-        agg = self._read(self.agg_dir, agg_schema)
+        if self.store.committed(epoch_id):
+            return
+        state = self.store.read("compact_state", batch_df.schema)
+        agg = self.store.read("agg_state", self.AGG_SCHEMA)
 
         batch_keys = batch_df.select("key").distinct()
         # subtractor: the previous live contribution of every changed key
@@ -583,14 +610,10 @@ class AggIvmJob:
             )
             .where(F.col("n_orders") > 0)  # nil-deletes-row
         )
-        # materialize agg BEFORE swapping the compact state it was built
-        # from (both reads are lazy over the old parquet)
-        self._write(new_agg, self.agg_dir, epoch_id)
-        self._write(merged, self.state_dir, epoch_id)
+        self.store.commit(epoch_id, {"agg_state": new_agg, "compact_state": merged})
 
     def view(self) -> DataFrame:
-        agg_schema = "o_custkey long, n_orders long, total_price double"
-        return self._read(self.agg_dir, agg_schema)
+        return self.store.read("agg_state", self.AGG_SCHEMA)
 
 
 def run_orders_rollup_ivm(
@@ -603,30 +626,7 @@ def run_orders_rollup_ivm(
     recompute) — final aggregate state must equal the batch recompute."""
     from ..sources.changelog import orders_changelog
 
-    cl = orders_changelog(spark, sf_dir)
-    chunk_dir = tempfile.mkdtemp(prefix="orders_ivm_chunks_")
-    write_changelog_chunks(cl, chunk_dir, n_chunks=n_chunks)
-    work_dir = tempfile.mkdtemp(prefix="orders_ivm_state_")
-    job = AggIvmJob(spark, work_dir)
-
-    # per-batch deltas are tiny; clamp the shuffle fan-out for the replay
-    # (same rationale as run_join_view_ivm), restored after the run
-    prev_parts = _pin_small_shuffle(spark)
-    stream = (
-        spark.readStream.schema(cl.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(chunk_dir)
-    )
-    query = (
-        stream.writeStream.foreachBatch(job.process_batch)
-        .option("checkpointLocation", os.path.join(work_dir, "checkpoint"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        query.awaitTermination()
-    finally:
-        _restore_shuffle(spark, prev_parts)
+    job = _replay(spark, orders_changelog(spark, sf_dir), AggIvmJob, "orders_ivm", n_chunks)
     return job.view().select(
         "o_custkey",
         "n_orders",
@@ -646,12 +646,12 @@ class JoinIvmJob:
     either side and gains the two delta-join terms. Work is
     O(|ΔA| ⋈ B) + O(A ⋈_semi ΔB) — at no point is A ⋈ B recomputed.
 
-    Three parquet state tables (Delta stand-ins): compacted A (orders),
-    compacted B (customer), and the materialized join view. On a cluster,
-    A-state is partitioned by the join key (o_custkey) so the
+    Three state tables in one epoch store (Delta stand-ins): compacted A
+    (orders), compacted B (customer), and the materialized join view. On a
+    cluster, A-state is partitioned by the join key (o_custkey) so the
     (A ∖ ΔA) ⋈ ΔB probe is a co-partitioned lookup, and the view is
     partitioned by the same key so the retract step prunes partitions —
-    the parquet swap here stands in for a keyed Delta MERGE.
+    the whole-table rewrite here stands in for a keyed Delta MERGE.
     """
 
     A_SCHEMA = "key long, o_custkey long, o_totalprice double, tombstone boolean, offset long"
@@ -661,43 +661,20 @@ class JoinIvmJob:
     )
 
     def __init__(self, spark: SparkSession, work_dir: str):
-        self.spark = spark
-        self.a_dir = os.path.join(work_dir, "a_state")
-        self.b_dir = os.path.join(work_dir, "b_state")
-        self.view_dir = os.path.join(work_dir, "view_state")
-
-    def _read(self, path, schema):
-        if not os.path.exists(os.path.join(path, "_SUCCESS")):
-            return self.spark.createDataFrame([], schema)
-        return self.spark.read.parquet(path)
-
-    def _write(self, df: DataFrame, path: str, epoch_id: int) -> None:
-        tmp = path + f".tmp-{epoch_id}"
-        df.write.mode("overwrite").parquet(tmp)
-        if os.path.exists(path):
-            shutil.rmtree(path)
-        os.rename(tmp, path)
-
-    @staticmethod
-    def _compact_flat(df: DataFrame, payload_cols: list) -> DataFrame:
-        """Latest record per key over flat columns, tombstones retained."""
-        packed = F.max_by(F.struct(*payload_cols, "tombstone"), "offset")
-        return (
-            df.groupBy("key")
-            .agg(packed.alias("p"), F.max("offset").alias("offset"))
-            .select("key", "p.*", "offset")
-        )
+        self.store = EpochStore(spark, work_dir)
 
     def process_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
+        if self.store.committed(epoch_id):
+            return
         # sever the streaming lineage: a streaming-sourced plan disables AQE
         # for every derived job, so the tiny per-batch deltas would shuffle
         # at the full static partition count. localCheckpoint materializes
         # the delta as a batch RDD — everything downstream gets AQE's
         # partition coalescing (observed 10x on the 8-batch replay).
         batch_df = batch_df.localCheckpoint(eager=True)
-        a_state = self._read(self.a_dir, self.A_SCHEMA)
-        b_state = self._read(self.b_dir, self.B_SCHEMA)
-        view = self._read(self.view_dir, self.VIEW_SCHEMA)
+        a_state = self.store.read("a_state", self.A_SCHEMA)
+        b_state = self.store.read("b_state", self.B_SCHEMA)
+        view = self.view_df()
 
         da = batch_df.where(F.col("src") == "o").select(
             "key", "o_custkey", "o_totalprice", "tombstone", "offset"
@@ -708,10 +685,10 @@ class JoinIvmJob:
         # persist the compacted states: each feeds its own state write AND
         # the delta-join terms AND the view write — without the cache the
         # triple write re-runs the compaction lineage three times per batch
-        a_new = self._compact_flat(
+        a_new = compact_flat(
             a_state.unionByName(da), ["o_custkey", "o_totalprice"]
         ).persist()
-        b_new = self._compact_flat(b_state.unionByName(db), ["c_mktsegment"]).persist()
+        b_new = compact_flat(b_state.unionByName(db), ["c_mktsegment"]).persist()
 
         a_keys = da.select("key").distinct()
         b_keys = db.select("key").distinct()
@@ -758,16 +735,14 @@ class JoinIvmJob:
             .unionByName(add_b)
             .coalesce(8)
         )
-
-        # materialize the view BEFORE swapping the states it reads from
-        self._write(new_view, self.view_dir, epoch_id)
-        self._write(a_new, self.a_dir, epoch_id)
-        self._write(b_new, self.b_dir, epoch_id)
+        self.store.commit(
+            epoch_id, {"view_state": new_view, "a_state": a_new, "b_state": b_new}
+        )
         a_new.unpersist()
         b_new.unpersist()
 
     def view_df(self) -> DataFrame:
-        return self._read(self.view_dir, self.VIEW_SCHEMA)
+        return self.store.read("view_state", self.VIEW_SCHEMA)
 
 
 def run_join_view_ivm(
@@ -781,30 +756,7 @@ def run_join_view_ivm(
     from ..sources.changelog import multiplexed_join_changelog
 
     cl = multiplexed_join_changelog(spark, sf_dir)
-    chunk_dir = tempfile.mkdtemp(prefix="join_ivm_chunks_")
-    write_changelog_chunks(cl, chunk_dir, n_chunks=n_chunks)
-    # per-batch deltas are tiny relative to the session default; a low
-    # shuffle fan-out keeps the 8-batch replay's task count (and thus
-    # scheduler overhead) proportional to the data. Restored after the run.
-    prev_parts = _pin_small_shuffle(spark)
-    work_dir = tempfile.mkdtemp(prefix="join_ivm_state_")
-    job = JoinIvmJob(spark, work_dir)
-
-    stream = (
-        spark.readStream.schema(cl.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(chunk_dir)
-    )
-    query = (
-        stream.writeStream.foreachBatch(job.process_batch)
-        .option("checkpointLocation", os.path.join(work_dir, "checkpoint"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        query.awaitTermination()
-    finally:
-        _restore_shuffle(spark, prev_parts)
+    job = _replay(spark, cl, JoinIvmJob, "join_ivm", n_chunks)
     return job.view_df().select(
         "o_orderkey",
         "o_custkey",
@@ -835,7 +787,7 @@ class StreamingLshDedupJob:
     are processed — two anti-joins on doc_id, no extra shuffle shape.
 
     State: band index (doc_id, band_idx, band_hash) and the kept-doc set —
-    both parquet (Delta stand-ins). Per batch the work is
+    both tables of one epoch store (Delta stand-ins). Per batch the work is
     |batch bands| ⋈ index on (band_idx, band_hash) — an equi-join on the
     blocking key, never a doc-pair product; at scale the index is
     partitioned by band_hash so the probe is co-located.
@@ -845,28 +797,16 @@ class StreamingLshDedupJob:
     KEPT_SCHEMA = "doc_id long, lang string"
 
     def __init__(self, spark: SparkSession, work_dir: str):
-        self.spark = spark
-        self.idx_dir = os.path.join(work_dir, "band_index")
-        self.kept_dir = os.path.join(work_dir, "kept")
-
-    def _read(self, path, schema):
-        if not os.path.exists(os.path.join(path, "_SUCCESS")):
-            return self.spark.createDataFrame([], schema)
-        return self.spark.read.parquet(path)
-
-    def _write(self, df: DataFrame, path: str, epoch_id: int) -> None:
-        tmp = path + f".tmp-{epoch_id}"
-        df.write.mode("overwrite").parquet(tmp)
-        if os.path.exists(path):
-            shutil.rmtree(path)
-        os.rename(tmp, path)
+        self.store = EpochStore(spark, work_dir)
 
     def process_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
         from ..operators.dedup import lsh_bands, minhash_signatures
 
+        if self.store.committed(epoch_id):
+            return
         batch_df = batch_df.localCheckpoint(eager=True)
-        idx = self._read(self.idx_dir, self.IDX_SCHEMA)
-        kept = self._read(self.kept_dir, self.KEPT_SCHEMA)
+        idx = self.index_df()
+        kept = self.kept_df()
 
         # tombstones first: retract deleted docs' bands + kept rows so they
         # stop matching future candidates and a re-add starts fresh
@@ -899,12 +839,14 @@ class StreamingLshDedupJob:
         new_idx = idx.unionByName(
             bands_new.select("doc_id", "band_idx", "band_hash")
         ).coalesce(4)
-        self._write(new_kept, self.kept_dir, epoch_id)
-        self._write(new_idx, self.idx_dir, epoch_id)
+        self.store.commit(epoch_id, {"kept": new_kept, "band_index": new_idx})
         bands_new.unpersist()
 
     def kept_df(self) -> DataFrame:
-        return self._read(self.kept_dir, self.KEPT_SCHEMA)
+        return self.store.read("kept", self.KEPT_SCHEMA)
+
+    def index_df(self) -> DataFrame:
+        return self.store.read("band_index", self.IDX_SCHEMA)
 
 
 def run_streaming_lsh_dedup(
@@ -919,28 +861,7 @@ def run_streaming_lsh_dedup(
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text", "lang", F.col("doc_id").alias("offset")
     )
-    chunk_dir = tempfile.mkdtemp(prefix="lshdedup_chunks_")
-    write_changelog_chunks(docs, chunk_dir, n_chunks=n_chunks)
-    work_dir = tempfile.mkdtemp(prefix="lshdedup_state_")
-    job = StreamingLshDedupJob(spark, work_dir)
-
-    prev_parts = _pin_small_shuffle(spark)
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(chunk_dir)
-    )
-    query = (
-        stream.writeStream.foreachBatch(job.process_batch)
-        .option("checkpointLocation", os.path.join(work_dir, "checkpoint"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        query.awaitTermination()
-    finally:
-        _restore_shuffle(spark, prev_parts)
-    return job.kept_df()
+    return _replay(spark, docs, StreamingLshDedupJob, "lshdedup", n_chunks).kept_df()
 
 
 def run_stream_stream_full_outer(
@@ -1087,7 +1008,7 @@ def run_watermark_late_drop(
     events = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type", "value"
     )
-    replay_dir = tempfile.mkdtemp(prefix="events_late_replay_")
+    replay_dir = scratch_dir("events_late_replay_")
     staging = os.path.join(replay_dir, "_staging")
     # Three batches, not two: Spark's stateful operators use TWO watermarks
     # (SPARK-40925) — late-input filtering uses the PREVIOUS batch's
@@ -1170,25 +1091,14 @@ class Scd2IvmJob:
     )
 
     def __init__(self, spark: SparkSession, work_dir: str):
-        self.spark = spark
-        self.scd_dir = os.path.join(work_dir, "scd2_state")
-
-    def _read(self):
-        if not os.path.exists(os.path.join(self.scd_dir, "_SUCCESS")):
-            return self.spark.createDataFrame([], self.SCD_SCHEMA)
-        return self.spark.read.parquet(self.scd_dir)
-
-    def _write(self, df: DataFrame, epoch_id: int) -> None:
-        tmp = self.scd_dir + f".tmp-{epoch_id}"
-        df.write.mode("overwrite").parquet(tmp)
-        if os.path.exists(self.scd_dir):
-            shutil.rmtree(self.scd_dir)
-        os.rename(tmp, self.scd_dir)
+        self.store = EpochStore(spark, work_dir)
 
     def process_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
         from pyspark.sql import Window as W
 
-        scd = self._read()
+        if self.store.committed(epoch_id):
+            return
+        scd = self.view()
         keys = batch_df.select("key").distinct()
         is_open = F.col("valid_to").isNull()
         # rows the batch cannot touch: all closed history + open rows of
@@ -1234,10 +1144,10 @@ class Scd2IvmJob:
                 "valid_to",
             )
         )
-        self._write(untouched.unionByName(versioned), epoch_id)
+        self.store.commit(epoch_id, {"scd2_state": untouched.unionByName(versioned)})
 
     def view(self) -> DataFrame:
-        return self._read()
+        return self.store.read("scd2_state", self.SCD_SCHEMA)
 
 
 def run_scd2_incremental(
@@ -1245,34 +1155,9 @@ def run_scd2_incremental(
 ) -> DataFrame:
     """SCD2 history maintained incrementally over an offset-ordered
     changelog replay; returns the final validity-interval table."""
-    import atexit
-
     from ..sources.changelog import orders_changelog
 
-    cl = orders_changelog(spark, sf_dir)
-    chunk_dir = tempfile.mkdtemp(prefix="scd2_ivm_chunks_")
-    atexit.register(shutil.rmtree, chunk_dir, True)
-    write_changelog_chunks(cl, chunk_dir, n_chunks=n_chunks)
-    work_dir = tempfile.mkdtemp(prefix="scd2_ivm_state_")
-    atexit.register(shutil.rmtree, work_dir, True)
-    job = Scd2IvmJob(spark, work_dir)
-
-    prev_parts = _pin_small_shuffle(spark)
-    stream = (
-        spark.readStream.schema(cl.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(chunk_dir)
-    )
-    query = (
-        stream.writeStream.foreachBatch(job.process_batch)
-        .option("checkpointLocation", os.path.join(work_dir, "checkpoint"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        query.awaitTermination()
-    finally:
-        _restore_shuffle(spark, prev_parts)
+    job = _replay(spark, orders_changelog(spark, sf_dir), Scd2IvmJob, "scd2_ivm", n_chunks)
     return job.view().select(
         "key",
         "o_custkey",
@@ -1288,40 +1173,37 @@ class SetIvmJob:
     """TRUE incremental maintenance of the reference's SET-valued view —
     SURVEY §7.4 hard-part #4's scale representation made real: the
     per-client position set is stored as a SORTED ARRAY and maintained by
-    array_except (subtractor) + array_union (adder) per micro-batch, with
-    work O(|changed keys|) — the snapshot-sized collect_set recompute
-    never runs.
+    array_except (subtractor) + array_union (adder) per micro-batch: the
+    delta is computed from the changed keys alone and the snapshot-sized
+    collect_set recompute never runs. I/O is still O(|state|): each batch
+    rewrites both tables whole.
 
     Per batch, for every changed key: its PREVIOUS visible contribution
     (latest compacted value that was non-tombstone and NASDAQ) is removed
     from its client's array, its NEW winning contribution added; a client
     whose array empties vanishes (the subtractor's nil-deletes-row,
-    kafka_streams.clj:77-79). Two parquet state tables (compacted
-    changelog + the array view); at cluster scale both partition by their
-    key and the array update is a keyed MERGE. This is the third IVM
-    face — aggregate (AggIvmJob), join (JoinIvmJob), dimension history
-    (Scd2IvmJob), and now the reference's own set semantics.
+    kafka_streams.clj:77-79). Two state tables in one epoch store
+    (compacted changelog + the array view); at cluster scale both
+    partition by their key and the array update is a keyed MERGE. This
+    is the third IVM face — aggregate (AggIvmJob), join (JoinIvmJob),
+    dimension history (Scd2IvmJob), and now the reference's own set
+    semantics.
     """
 
     VIEW_SCHEMA = "client string, positions array<string>"
 
     def __init__(self, spark: SparkSession, work_dir: str):
-        self.spark = spark
-        self.state_dir = os.path.join(work_dir, "compact_state")
-        self.view_dir = os.path.join(work_dir, "set_view")
-        self._schema = None
+        self.store = EpochStore(spark, work_dir)
 
-    def _read(self, path, schema):
-        if not os.path.exists(os.path.join(path, "_SUCCESS")):
-            return self.spark.createDataFrame([], schema)
-        return self.spark.read.parquet(path)
+    @property
+    def state_dir(self) -> str:
+        """Directory of the committed compacted-changelog parquet files."""
+        return self.store.path("compact_state")
 
-    def _write(self, df: DataFrame, path: str, epoch_id: int) -> None:
-        tmp = path + f".tmp-{epoch_id}"
-        df.write.mode("overwrite").parquet(tmp)
-        if os.path.exists(path):
-            shutil.rmtree(path)
-        os.rename(tmp, path)
+    @property
+    def view_dir(self) -> str:
+        """Directory of the committed view parquet files."""
+        return self.store.path("set_view")
 
     @staticmethod
     def _visible(df: DataFrame) -> DataFrame:
@@ -1334,9 +1216,10 @@ class SetIvmJob:
         )
 
     def process_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
-        self._schema = batch_df.schema
-        state = self._read(self.state_dir, self._schema)
-        view = self._read(self.view_dir, self.VIEW_SCHEMA)
+        if self.store.committed(epoch_id):
+            return
+        state = self.store.read("compact_state", batch_df.schema)
+        view = self.view()
         keys = batch_df.select("key").distinct()
 
         # subtractor: previous visible contribution of each changed key
@@ -1374,13 +1257,13 @@ class SetIvmJob:
             .where(F.size("positions") > 0)
         )
         untouched = view.join(delta, "client", "left_anti")
-        self._write(
-            untouched.unionByName(updated), self.view_dir, epoch_id
+        self.store.commit(
+            epoch_id,
+            {"set_view": untouched.unionByName(updated), "compact_state": merged},
         )
-        self._write(merged, self.state_dir, epoch_id)
 
     def view(self) -> DataFrame:
-        return self._read(self.view_dir, self.VIEW_SCHEMA)
+        return self.store.read("set_view", self.VIEW_SCHEMA)
 
 
 def run_shareholders_set_ivm(
@@ -1388,34 +1271,10 @@ def run_shareholders_set_ivm(
 ) -> DataFrame:
     """The shareholders set view maintained by array add/subtract over an
     offset-ordered changelog replay; returns the final view."""
-    import atexit
-
     from ..sources.changelog import shareholders_changelog
 
     cl = shareholders_changelog(spark, sf_dir)
-    chunk_dir = tempfile.mkdtemp(prefix="set_ivm_chunks_")
-    atexit.register(shutil.rmtree, chunk_dir, True)
-    write_changelog_chunks(cl, chunk_dir, n_chunks=n_chunks)
-    work_dir = tempfile.mkdtemp(prefix="set_ivm_state_")
-    atexit.register(shutil.rmtree, work_dir, True)
-    job = SetIvmJob(spark, work_dir)
-
-    prev_parts = _pin_small_shuffle(spark)
-    stream = (
-        spark.readStream.schema(cl.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(chunk_dir)
-    )
-    query = (
-        stream.writeStream.foreachBatch(job.process_batch)
-        .option("checkpointLocation", os.path.join(work_dir, "checkpoint"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        query.awaitTermination()
-    finally:
-        _restore_shuffle(spark, prev_parts)
+    job = _replay(spark, cl, SetIvmJob, "set_ivm", n_chunks)
     return job.view().select(
         "client", F.concat_ws(",", "positions").alias("positions")
     )
@@ -1438,10 +1297,10 @@ class CogroupIvmJob:
     (the nil-deletes-row rule, kafka_streams.clj:77-79, lifted to the
     merged table).
 
-    State tables (parquet stand-ins for keyed Delta MERGE at cluster
-    scale): the compacted flat changelog (partition by key) and the
-    cogrouped view (partition by client — the retract/insert swap then
-    prunes to changed-client partitions).
+    State tables (one epoch store; stand-ins for keyed Delta MERGE at
+    cluster scale): the compacted flat changelog (partition by key) and
+    the cogrouped view (partition by client — the retract/insert swap
+    then prunes to changed-client partitions).
     """
 
     VIEW_SCHEMA = (
@@ -1449,33 +1308,10 @@ class CogroupIvmJob:
         " n_positions long, n_nasdaq long"
     )
 
+    PAYLOAD = ["src", "o_custkey", "o_totalprice", "client", "exchange"]
+
     def __init__(self, spark: SparkSession, work_dir: str):
-        self.spark = spark
-        self.state_dir = os.path.join(work_dir, "compact_state")
-        self.view_dir = os.path.join(work_dir, "cogroup_view")
-        self._schema = None
-
-    def _read(self, path, schema):
-        if not os.path.exists(os.path.join(path, "_SUCCESS")):
-            return self.spark.createDataFrame([], schema)
-        return self.spark.read.parquet(path)
-
-    def _write(self, df: DataFrame, path: str, epoch_id: int) -> None:
-        tmp = path + f".tmp-{epoch_id}"
-        df.write.mode("overwrite").parquet(tmp)
-        if os.path.exists(path):
-            shutil.rmtree(path)
-        os.rename(tmp, path)
-
-    @staticmethod
-    def _compact_flat(df: DataFrame) -> DataFrame:
-        payload = ["src", "o_custkey", "o_totalprice", "client", "exchange"]
-        packed = F.max_by(F.struct(*payload, "tombstone"), "offset")
-        return (
-            df.groupBy("key")
-            .agg(packed.alias("p"), F.max("offset").alias("offset"))
-            .select("key", "p.*", "offset")
-        )
+        self.store = EpochStore(spark, work_dir)
 
     @staticmethod
     def _client_of(df: DataFrame):
@@ -1486,14 +1322,15 @@ class CogroupIvmJob:
         ).otherwise(F.col("client"))
 
     def process_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
+        if self.store.committed(epoch_id):
+            return
         # sever streaming lineage so AQE coalesces the tiny per-batch plans
         batch_df = batch_df.localCheckpoint(eager=True)
-        self._schema = batch_df.schema
-        state = self._read(self.state_dir, self._schema)
-        view = self._read(self.view_dir, self.VIEW_SCHEMA)
+        state = self.store.read("compact_state", batch_df.schema)
+        view = self.view()
 
         keys = batch_df.select("key").distinct()
-        merged = self._compact_flat(state.unionByName(batch_df)).persist()
+        merged = compact_flat(state.unionByName(batch_df), self.PAYLOAD).persist()
 
         # clients the batch touches: previous owners of changed keys (the
         # only place a tombstoned key's client survives) + new values
@@ -1546,14 +1383,17 @@ class CogroupIvmJob:
             )
         )
         untouched = view.join(clients, "client", "left_anti")
-        self._write(
-            untouched.unionByName(updated).coalesce(8), self.view_dir, epoch_id
+        self.store.commit(
+            epoch_id,
+            {
+                "cogroup_view": untouched.unionByName(updated).coalesce(8),
+                "compact_state": merged,
+            },
         )
-        self._write(merged, self.state_dir, epoch_id)
         merged.unpersist()
 
     def view(self) -> DataFrame:
-        return self._read(self.view_dir, self.VIEW_SCHEMA)
+        return self.store.read("cogroup_view", self.VIEW_SCHEMA)
 
 
 def run_cogroup_ivm(
@@ -1562,35 +1402,10 @@ def run_cogroup_ivm(
     """Replay the multiplexed orders+positions changelog in n_chunks
     micro-batches through CogroupIvmJob; returns the final cogrouped view
     (must equal the batch cogroup of the two latest snapshots)."""
-    import atexit
-
     from ..sources.changelog import cogroup_multiplexed_changelog
 
     cl = cogroup_multiplexed_changelog(spark, sf_dir)
-    chunk_dir = tempfile.mkdtemp(prefix="cogroup_ivm_chunks_")
-    atexit.register(shutil.rmtree, chunk_dir, True)
-    write_changelog_chunks(cl, chunk_dir, n_chunks=n_chunks)
-    work_dir = tempfile.mkdtemp(prefix="cogroup_ivm_state_")
-    atexit.register(shutil.rmtree, work_dir, True)
-    job = CogroupIvmJob(spark, work_dir)
-
-    prev_parts = _pin_small_shuffle(spark)
-    stream = (
-        spark.readStream.schema(cl.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(chunk_dir)
-    )
-    query = (
-        stream.writeStream.foreachBatch(job.process_batch)
-        .option("checkpointLocation", os.path.join(work_dir, "checkpoint"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        query.awaitTermination()
-    finally:
-        _restore_shuffle(spark, prev_parts)
-    return job.view()
+    return _replay(spark, cl, CogroupIvmJob, "cogroup_ivm", n_chunks).view()
 
 
 def run_tvd_drift_monitor(
@@ -1610,10 +1425,6 @@ def run_tvd_drift_monitor(
     formula as the replay writer), so append output is exactly
     predictable from batch data.
     """
-    import atexit as _atexit
-    import shutil as _shutil
-    import tempfile as _tempfile
-
     from ..sources.fixture_cache import ensure_layout, fixture_dir
     from ..sources.tables import load_table
 
@@ -1657,7 +1468,7 @@ def run_tvd_drift_monitor(
                     dst = os.path.join(path, f"{i:03d}-{j}.parquet")
                     os.rename(os.path.join(d, f), dst)
                     os.utime(dst, (1_600_000_000 + i, 1_600_000_000 + i))
-        _shutil.rmtree(staging)
+        shutil.rmtree(staging)
         with open(os.path.join(path, "_SUCCESS"), "w"):
             pass
 
@@ -1691,11 +1502,9 @@ def run_tvd_drift_monitor(
         )
         results.append((int(epoch_id), n, tvd))
 
-    ckpt = _tempfile.mkdtemp(prefix="tvd_drift_ckpt_")
-    _atexit.register(_shutil.rmtree, ckpt, True)
     query = (
         stream.writeStream.foreachBatch(_score)
-        .option("checkpointLocation", ckpt)
+        .option("checkpointLocation", scratch_dir("tvd_drift_ckpt_"))
         .trigger(availableNow=True)
         .start()
     )

@@ -28,7 +28,6 @@ from __future__ import annotations
 
 import json
 import os
-import tempfile
 import uuid
 from typing import Any, Iterator, Tuple
 
@@ -38,6 +37,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from ..session import scratch_dir
 from ..sources.changelog import CHANGELOG_SCHEMA
 
 _OUTPUT_SCHEMA = "client string, positions string, seq long"
@@ -99,7 +99,7 @@ def run_shareholders_stateful(
     interactive query would observe after the replay
     (`kafka_streams.clj:83-89`).
     """
-    work_dir = work_dir or tempfile.mkdtemp(prefix="ktable_stateful_")
+    work_dir = work_dir or scratch_dir("ktable_stateful_")
     checkpoint = os.path.join(work_dir, "checkpoint")
 
     stream = (
@@ -219,7 +219,7 @@ def run_sessionize_with_timeout(
     watermark (SPARK-40925 two-watermark model), so sentinel #1 advances
     the watermark and sentinel #2's processing fires the timeouts that
     flush every still-open real session."""
-    work_dir = work_dir or tempfile.mkdtemp(prefix="session_timeout_")
+    work_dir = work_dir or scratch_dir("session_timeout_")
     # stateful streaming disables AQE; 32 shuffle partitions × 8 batches is
     # pure scheduling overhead at replay scale — pin a small count (state
     # store count is fixed per checkpoint anyway)
